@@ -165,6 +165,11 @@ def estimated_groups(df: DataFrame, cols: Sequence[str]) -> Optional[int]:
     return None if bound > _SPAN_TRUST_CAP else bound
 
 
+# One task's sort budget for auto_two_phase: ~hundreds of MB of sort
+# input, the point where a single task's sort dominates the stage.
+TWO_PHASE_TASK_ROWS = 4_000_000
+
+
 def auto_two_phase(
     df: DataFrame,
     n_groups: Optional[int] = None,
@@ -190,19 +195,15 @@ def auto_two_phase(
     arm the scale-safe path earlier, never later.  ``n_groups`` remains
     as an explicit override (1 = global window, which is exact, not a
     hint).  ``SPARK_GRAFT_TWO_PHASE_RANK=1/0`` still force-overrides
-    both ways (operational escape hatch);
-    ``SPARK_GRAFT_TWO_PHASE_TASK_ROWS`` overrides the threshold
-    (default 4M rows/task — ~hundreds of MB of sort input, the point
-    where a single task's sort dominates the stage)."""
+    both ways (operational escape hatch); ``task_rows`` defaults to
+    the module's ``TWO_PHASE_TASK_ROWS`` (4M rows/task)."""
     env = os.environ.get("SPARK_GRAFT_TWO_PHASE_RANK")
     if env == "1":
         return True
     if env == "0":
         return False
     if task_rows is None:
-        task_rows = int(
-            os.environ.get("SPARK_GRAFT_TWO_PHASE_TASK_ROWS", "4000000")
-        )
+        task_rows = TWO_PHASE_TASK_ROWS
     if n_groups is None:
         n_groups = (
             estimated_groups(df, group_cols) if group_cols else None

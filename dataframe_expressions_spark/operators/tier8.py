@@ -397,7 +397,8 @@ def stats_xi_correlation(spark: SparkSession, sf_dir: str) -> SDF:
     env-var opt-in an operator author had to remember): the
     functions/ranks.py ``auto_two_phase`` cost gate flips it from the
     driver-side Catalyst size estimate (no extra job) when the
-    estimated rows per group exceed one task's sort budget — and both
+    estimated rows per group exceed one task's sort budget
+    (``ranks.TWO_PHASE_TASK_ROWS``) — and both
     rank windows — the Y-rank and the X-position that feeds the lag —
     then run range-partitioned, with the lag re-expressed as a
     co-partitioned self-join on (grp, position−1).
@@ -1662,7 +1663,8 @@ def text_perplexity_bucket(spark: SparkSession, sf_dir: str) -> SDF:
     like stats_xi_correlation): the functions/ranks.py ``auto_two_phase``
     gate flips it from the driver-side Catalyst size estimate when the
     global frame exceeds one task's sort budget
-    (``SPARK_GRAFT_TWO_PHASE_RANK=1/0`` still forces), and the bucket is
+    (``ranks.TWO_PHASE_TASK_ROWS``; ``SPARK_GRAFT_TWO_PHASE_RANK=1/0``
+    still forces), and the bucket is
     derived by SQL-ntile sizing arithmetic (first n % B buckets take
     ⌈n/B⌉ rows) — row-identical to the native ntile, exact integer
     bucket assignment.  The final
@@ -3322,9 +3324,9 @@ def table_merge_bucketed(spark: SparkSession, sf_dir: str) -> SDF:
     construction: the source filter is the bucket function itself
     (``o_custkey % 16 < 3``), and the ``%7``-shifted insert keys add an
     exact multiple of 16 (1 000 000 ≡ 0 mod 16), so they stay inside the
-    touched set.  ``merge_into_bucketed`` rewrites ONLY those 3 buckets;
-    the other 13 ride into v1's manifest BY REFERENCE — the same
-    physical v0 parquet files, byte-identical, zero bytes rewritten
+    touched set.  ``merge_into_bucketed_exclusive`` rewrites ONLY those
+    3 buckets; the other 13 ride into v1's manifest BY REFERENCE — the
+    same physical v0 parquet files, byte-identical, zero bytes rewritten
     (asserted file-by-file in tests/test_mergetable.py).  The returned
     frame is the manifest-resolved READ-BACK of v1, so the oracle checks
     the full bucket-routed write → manifest commit → union-by-reference
@@ -3352,11 +3354,16 @@ def _ensure_bucketed_table(spark: SparkSession, sf_dir: str) -> str:
     from ..sources.mergetable import (
         commit_bucketed,
         latest_version,
-        merge_into_bucketed,
+        merge_into_bucketed_exclusive,
     )
 
     root = _bucketed_table_root(sf_dir)
     if (latest_version(root) or -1) < 1:
+        import shutil
+
+        # partial build: restart from an empty root, so the merge
+        # commits v1 (the claim loop skips, never reuses, an orphan)
+        shutil.rmtree(root, ignore_errors=True)
         cust = load_table(spark, sf_dir, "customer")
         v0 = cust.select(
             "c_custkey",
@@ -3386,7 +3393,7 @@ def _ensure_bucketed_table(spark: SparkSession, sf_dir: str) -> str:
                 F.count(F.lit(1)).cast("long").alias("n_o"),
             )
         )
-        merge_into_bucketed(
+        merge_into_bucketed_exclusive(
             spark, root, chg,
             matched_update={
                 "acctbal": "t.acctbal + s.rev",

@@ -1006,7 +1006,7 @@ def stream_dsl_changes(spark: SparkSession, sf_dir: str) -> SDF:
     from ..sources.mergetable import (
         commit_bucketed,
         latest_version,
-        merge_into_bucketed,
+        merge_into_bucketed_exclusive,
         read_bucketed,
     )
     from ..streaming.windows import run_to_memory
@@ -1032,7 +1032,7 @@ def stream_dsl_changes(spark: SparkSession, sf_dir: str) -> SDF:
             meta={"op": "create"},
         )
         for i in (1, 2):
-            merge_into_bucketed(
+            merge_into_bucketed_exclusive(
                 spark, up,
                 ledger(i).withColumnRenamed("n_events", "bn"),
                 matched_update={"n_events": "t.n_events + s.bn"},
@@ -1262,7 +1262,7 @@ def table_vacuum_retention(spark: SparkSession, sf_dir: str) -> SDF:
         commit_bucketed,
         committed_versions,
         latest_version,
-        merge_into_bucketed,
+        merge_into_bucketed_exclusive,
         read_bucketed,
         vacuum,
         vacuum_horizon,
@@ -1306,7 +1306,7 @@ def table_vacuum_retention(spark: SparkSession, sf_dir: str) -> SDF:
             n_buckets=16, hashed=False, meta={"op": "create"},
         )
         for i in (1, 2, 3):
-            merge_into_bucketed(
+            merge_into_bucketed_exclusive(
                 spark, root,
                 _order_changes(spark, sf_dir, where=m16 == i),
                 meta={"op": f"merge-{i}"}, **clauses,
@@ -1523,7 +1523,7 @@ def table_restore(spark: SparkSession, sf_dir: str) -> SDF:
     from ..sources.mergetable import (
         commit_bucketed,
         latest_version,
-        merge_into_bucketed,
+        merge_into_bucketed_exclusive,
         read_bucketed,
         restore_table,
     )
@@ -1549,13 +1549,13 @@ def table_restore(spark: SparkSession, sf_dir: str) -> SDF:
             _customer_v0(spark, sf_dir), root, 0, on="c_custkey",
             n_buckets=16, hashed=False, meta={"op": "create"},
         )
-        merge_into_bucketed(  # the MISTAKE: v1
+        merge_into_bucketed_exclusive(  # the MISTAKE: v1
             spark, root,
             _order_changes(spark, sf_dir, where=m16.isin(6, 7)),
             meta={"op": "merge-unwanted"}, **clauses,
         )
         restore_table(spark, root, 0, meta={"reason": "revert"})  # v2
-        merge_into_bucketed(  # the intended merge: v3
+        merge_into_bucketed_exclusive(  # the intended merge: v3
             spark, root,
             _order_changes(spark, sf_dir, where=m16.isin(4, 5)),
             meta={"op": "merge-intended"}, **clauses,
@@ -1595,7 +1595,7 @@ def table_clone_shallow(spark: SparkSession, sf_dir: str) -> SDF:
         clone_shallow,
         commit_bucketed,
         latest_version,
-        merge_into_bucketed,
+        merge_into_bucketed_exclusive,
         read_bucketed,
     )
 
@@ -1621,13 +1621,13 @@ def table_clone_shallow(spark: SparkSession, sf_dir: str) -> SDF:
             _customer_v0(spark, sf_dir), src, 0, on="c_custkey",
             n_buckets=16, hashed=False, meta={"op": "create"},
         )
-        merge_into_bucketed(
+        merge_into_bucketed_exclusive(
             spark, src,
             _order_changes(spark, sf_dir, where=m16.isin(6, 7)),
             meta={"op": "merge-src"}, **clauses,
         )
         clone_shallow(src, dst)
-        merge_into_bucketed(  # lands in the CLONE only
+        merge_into_bucketed_exclusive(  # lands in the CLONE only
             spark, dst,
             _order_changes(spark, sf_dir, where=m16.isin(8, 9)),
             meta={"op": "merge-clone"}, **clauses,
@@ -1683,7 +1683,7 @@ def stream_table_source(spark: SparkSession, sf_dir: str) -> SDF:
     from ..sources.mergetable import (
         commit_bucketed,
         latest_version,
-        merge_into_bucketed,
+        merge_into_bucketed_exclusive,
         read_bucketed,
     )
     from ..sources.tables import write_done_marker
@@ -1712,7 +1712,7 @@ def stream_table_source(spark: SparkSession, sf_dir: str) -> SDF:
             meta={"op": "create"},
         )
         for i in (1, 2):
-            merge_into_bucketed(
+            merge_into_bucketed_exclusive(
                 spark,
                 up,
                 ledger(i).withColumnRenamed("n_events", "bn"),
@@ -1784,10 +1784,10 @@ def table_bucketed_delete(spark: SparkSession, sf_dir: str) -> SDF:
     CONSTRUCTION (the bucket function is applied to the merge key), so
     the delete always lands inside the buckets being rewritten anyway.
     The complementary clause, WHEN NOT MATCHED BY SOURCE DELETE, is
-    deliberately REJECTED by ``merge_into_bucketed``: it targets rows
-    in buckets the source never touches, which would silently forfeit
-    the k/B write bound — that clause belongs to the table-granularity
-    path, which prices the full rewrite honestly.
+    deliberately REJECTED by ``merge_into_bucketed_exclusive``: it
+    targets rows in buckets the source never touches, which would
+    silently forfeit the k/B write bound — that clause belongs to the
+    table-granularity path, which prices the full rewrite honestly.
 
     The change set is confined to buckets {0,1,2} of 16 (the %16
     filter precedes the %7 key shift; 1000000 % 16 == 0 keeps shifted
@@ -1800,17 +1800,20 @@ def table_bucketed_delete(spark: SparkSession, sf_dir: str) -> SDF:
     from ..sources.mergetable import (
         commit_bucketed,
         latest_version,
-        merge_into_bucketed,
+        merge_into_bucketed_exclusive,
         read_bucketed,
     )
 
     root = _table_root(sf_dir, "custbdel_v1")
     if (latest_version(root) or -1) < 1:
+        import shutil
+
+        shutil.rmtree(root, ignore_errors=True)  # partial build: restart
         commit_bucketed(
             _customer_v0(spark, sf_dir), root, 0, on="c_custkey",
             n_buckets=16, hashed=False, meta={"op": "create"},
         )
-        merge_into_bucketed(
+        merge_into_bucketed_exclusive(
             spark,
             root,
             _order_changes(spark, sf_dir, where=F.col("o_custkey") % 16 < 3),
@@ -2018,7 +2021,7 @@ def table_bucketed_zorder(spark: SparkSession, sf_dir: str) -> SDF:
     from ..sources.mergetable import (
         commit_bucketed,
         latest_version,
-        merge_into_bucketed,
+        merge_into_bucketed_exclusive,
         read_bucketed,
     )
 
@@ -2045,7 +2048,7 @@ def table_bucketed_zorder(spark: SparkSession, sf_dir: str) -> SDF:
             .distinct()
             .withColumn("bump", F.lit(100.0))
         )
-        merge_into_bucketed(
+        merge_into_bucketed_exclusive(
             spark, root, src,
             matched_update={"o_totalprice": "t.o_totalprice + s.bump"},
             not_matched_insert={"o_totalprice": "s.bump"},
@@ -2230,7 +2233,7 @@ def table_compact_buckets(spark: SparkSession, sf_dir: str) -> SDF:
         commit_bucketed,
         compact_buckets,
         latest_version,
-        merge_into_bucketed,
+        merge_into_bucketed_exclusive,
         read_bucketed,
     )
 
@@ -2244,7 +2247,7 @@ def table_compact_buckets(spark: SparkSession, sf_dir: str) -> SDF:
         # %16 filter BEFORE the %7 shift: 1000000 % 16 == 0, so shifted
         # insert keys stay inside buckets {0,1} (same trick as the
         # tier-8 bucketed table)
-        merge_into_bucketed(
+        merge_into_bucketed_exclusive(
             spark,
             root,
             _order_changes(spark, sf_dir, where=F.col("o_custkey") % 16 < 2),

@@ -70,6 +70,11 @@ _SESSION_COUNTER = iter(range(1, 1 << 62))
 # otherwise grow it forever.  Insertion-ordered eviction: forgetting an
 # old node only forfeits a future persist opportunity — conservative.
 _CROSS_ACTION_CAP = 4096
+# Auto-persist size gate (see Lowerer._maybe_auto_persist): below the
+# floor a recompute is cheaper than cache bookkeeping; above the
+# ceiling MEMORY_AND_DISK would spill the whole frame to executor disk.
+AUTO_PERSIST_MIN_BYTES = 1 << 20
+AUTO_PERSIST_MAX_BYTES = 64 << 30
 
 
 def unpersist_points(blocking: bool = False) -> int:
@@ -267,8 +272,8 @@ class Lowerer:
           Generate in the optimized plan): a bare filtered scan re-reads
           CHEAPER than it caches — pushdown + pruning make the rescan
           narrow, while the cache stores materialized rows;
-        * estimated size within [SPARK_GRAFT_AUTO_PERSIST_MIN_BYTES,
-          SPARK_GRAFT_AUTO_PERSIST_MAX_BYTES] (default 1 MiB … 64 GiB):
+        * estimated size within [AUTO_PERSIST_MIN_BYTES,
+          AUTO_PERSIST_MAX_BYTES] (module constants, 1 MiB … 64 GiB):
           below, the recompute is cheaper than cache bookkeeping; above,
           MEMORY_AND_DISK would spill the whole frame to executor disk —
           at 100 TB that write amplification loses to re-scanning a
@@ -332,13 +337,7 @@ class Lowerer:
                 return
         except Exception:  # noqa: BLE001 — streaming/unresolvable: skip
             return
-        lo = int(os.environ.get(
-            "SPARK_GRAFT_AUTO_PERSIST_MIN_BYTES", str(1 << 20)
-        ))
-        hi = int(os.environ.get(
-            "SPARK_GRAFT_AUTO_PERSIST_MAX_BYTES", str(64 << 30)
-        ))
-        if not (lo <= size <= hi):
+        if not (AUTO_PERSIST_MIN_BYTES <= size <= AUTO_PERSIST_MAX_BYTES):
             return
         from pyspark import StorageLevel
 

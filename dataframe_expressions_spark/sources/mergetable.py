@@ -74,18 +74,28 @@ never a marker pointing at deleted data.
 
 100 TB note (round 11: IMPLEMENTED): table-granularity COW (rewriting
 the whole snapshot per MERGE) is correct but write-amplified; the
-bucketed layer below partitions the snapshot by a key bucket and
-``merge_into_bucketed`` rewrites ONLY the buckets that contain source
-keys (matched updates and inserts both land there by construction —
-the bucket function is applied to the join key), unioning untouched
-buckets BY REFERENCE: version n's commit marker carries a manifest
-``{bucket: relative data path}`` and an untouched bucket's entry keeps
-pointing at the older version's physical files.  The commit protocol
-is unchanged — the refinement is file layout plus manifest metadata,
-exactly the Iceberg/Delta partition-scoped-rewrite idea reduced to its
-essence.  ``vacuum`` is manifest-aware: a dropped version's bucket
-directory survives as long as any kept version's manifest references
-it.
+bucketed layer below partitions the snapshot by a key bucket and the
+one bucketed MERGE, ``merge_into_bucketed_exclusive``, rewrites ONLY
+the buckets that contain source keys (matched updates and inserts both
+land there by construction — the bucket function is applied to the
+join key), unioning untouched buckets BY REFERENCE: version n's commit
+marker carries a manifest ``{bucket: relative data path}`` and an
+untouched bucket's entry keeps pointing at the older version's
+physical files.  It commits through the OCC claim loop above, so one
+path serves a lone writer and many.  The refinement is file layout
+plus manifest metadata, exactly the Iceberg/Delta
+partition-scoped-rewrite idea reduced to its essence.  ``vacuum`` is
+manifest-aware: a dropped version's bucket directory survives as long
+as any kept version's manifest references it.
+
+File statistics (data skipping): a commit may record per-file footer
+``[min, max]`` in its marker — ``file_stats`` for one ``stats_key``,
+``file_stats_cols`` for a ``stats_cols`` list.  One pipeline serves
+both families: one footer reader, one collector over relative dirs,
+one carry for bucket-scoped commits (fresh stats for rewritten
+buckets, recorded entries for by-reference ones), and one prune that
+``key_range=`` reads call with ``file_stats`` as a one-column view of
+what ``ranges=`` reads use.
 
 Round-11 continuation — the remaining lakehouse surface, each feature
 priced by its scale trade:
@@ -118,10 +128,13 @@ priced by its scale trade:
   fragmented fraction, never the table.
 
 Crash rule for the data-deriving commits (bucketed MERGE, compaction,
-MoR deletes): a marker-less orphan ``v<n>`` is CLEARED, never adopted
-— the orphan may hold a different call's output, and attaching a
-fresh marker to stale data is the silent-wrong-data class this
-module's protocol exists to rule out.
+MoR deletes, OPTIMIZE): a marker-less orphan ``v<n>`` is never
+adopted — the orphan may hold a different call's output, and
+attaching a fresh marker to stale data is the silent-wrong-data class
+this module's protocol exists to rule out.  Their claim loop treats
+the orphan as a silent claimant: it is fenced after ``marker_timeout``
+and its version number skipped; vacuum sweeps it once a later version
+commits.
 """
 
 from __future__ import annotations
@@ -156,7 +169,6 @@ __all__ = [
     "latest_version",
     "feed_since",
     "merge_into",
-    "merge_into_bucketed",
     "merge_into_bucketed_exclusive",
     "optimize_zorder",
     "read_bucketed",
@@ -673,88 +685,92 @@ def read_version(
             ],
         )
         return base.join(F.broadcast(dels), cond, "left_anti")
-    if ranges:
-        stats_c = meta.get("file_stats_cols")
-        if not stats_c:
-            raise ValueError(
-                f"version {n} of {root} has no multi-column file "
-                "statistics — commit with stats_cols= to enable ranges "
-                "reads"
-            )
-        unknown = sorted(set(ranges) - set(stats_c["cols"]))
-        if unknown:
-            raise ValueError(
-                f"ranges constrain column(s) {unknown} with no recorded "
-                f"statistics (recorded: {stats_c['cols']})"
-            )
-        for c, (lo, hi) in ranges.items():
-            first = next(
-                (
-                    per.get(c)
-                    for per in stats_c["files"].values()
-                    if per and per.get(c) is not None
-                ),
-                None,
-            )
-            if first is not None:
-                _check_range_types(
-                    {"key": c, "files": {"_": first}}, lo, hi, (lo, hi)
-                )
-        keep = []
-        for rel, per_col in stats_c["files"].items():
-            ok = True
-            for c, (lo, hi) in ranges.items():
-                mm = (per_col or {}).get(c)
-                if mm is not None and (mm[1] < lo or mm[0] > hi):
-                    ok = False
-                    break
-            if ok:
-                keep.append(os.path.join(root, rel))
-        if not keep:
-            return spark.read.parquet(snap).limit(0)
-        df = spark.read.parquet(*keep)
-        for c, (lo, hi) in ranges.items():
-            df = df.where(F.col(c).between(F.lit(lo), F.lit(hi)))
-        return df
-    if key_range is None:
+    if not ranges and key_range is None:
         return spark.read.parquet(snap)
-    stats = meta.get("file_stats")
-    if not stats:
-        raise ValueError(
-            f"version {n} of {root} has no file statistics — commit with "
-            "stats_key= to enable key_range reads"
-        )
-    key = stats["key"]
-    lo, hi = key_range
-    _check_range_types(stats, lo, hi, key_range)
-    keep = [
-        os.path.join(root, rel)
-        for rel, mm in stats["files"].items()
-        if mm is None or not (mm[1] < lo or mm[0] > hi)
-    ]
+    keep, preds = _prune_files(
+        root, meta, f"version {n} of {root}", key_range, ranges
+    )
     if not keep:
         # no file can match: exact empty answer, footer-only planning
         return spark.read.parquet(snap).limit(0)
-    return spark.read.parquet(*keep).where(
-        F.col(key).between(F.lit(lo), F.lit(hi))
-    )
+    df = spark.read.parquet(*keep)
+    for p in preds:
+        df = df.where(p)
+    return df
 
 
-def _check_range_types(stats: dict, lo, hi, key_range) -> None:
-    """A str-vs-numeric comparison against recorded stats would either
-    raise mid-prune or, worse, order lexicographically — refuse loudly
+def _prune_files(
+    root: str,
+    meta: dict,
+    what: str,
+    key_range: Optional["tuple"],
+    ranges: Optional[dict],
+    sel_dirs: "Optional[set[str]]" = None,
+) -> "tuple[List[str], list]":
+    """DATA SKIPPING from the commit marker: the files of a version
+    whose recorded per-file ``[min, max]`` overlaps EVERY requested
+    inclusive range, plus the range predicates to apply as residual
+    (pushed) filters — so results are exact however much the stats
+    prune.  ``ranges={col: (lo, hi)}`` reads the ``file_stats_cols``
+    family; ``key_range=(lo, hi)`` reads ``file_stats`` as its
+    one-column view.  ``sel_dirs`` restricts the candidates to those
+    relative directories (bucket pruning).  Files whose stats are
+    NULL-only or missing are conservatively kept; bounds whose type
+    does not match the recorded stats (str vs numeric would raise
+    mid-prune or, worse, order lexicographically) are refused loudly
     (round-11 review)."""
-    first = next(
-        (mm for mm in stats["files"].values() if mm is not None), None
-    )
-    if first is not None and (
-        isinstance(first[0], str) != isinstance(lo, str)
-        or isinstance(first[0], str) != isinstance(hi, str)
-    ):
-        raise ValueError(
-            f"key_range bounds {key_range!r} do not match the recorded "
-            f"stats type for {stats['key']!r} (e.g. {first!r})"
+    if ranges:
+        stats = meta.get("file_stats_cols")
+        if not stats:
+            raise ValueError(
+                f"{what} has no multi-column file statistics — commit "
+                "with stats_cols= to enable ranges reads"
+            )
+        unknown = sorted(set(ranges) - set(stats["cols"]))
+        if unknown:
+            raise ValueError(
+                f"ranges constrain column(s) {unknown} with no recorded "
+                f"statistics (recorded: {stats['cols']})"
+            )
+        files = stats["files"]
+    else:
+        stats = meta.get("file_stats")
+        if not stats:
+            raise ValueError(
+                f"{what} has no file statistics — commit with "
+                "stats_key= to enable key_range reads"
+            )
+        ranges = {stats["key"]: key_range}
+        files = {
+            rel: {stats["key"]: mm} for rel, mm in stats["files"].items()
+        }
+    for c, bounds in ranges.items():
+        first = next(
+            (per[c] for per in files.values() if per and per.get(c)),
+            None,
         )
+        if first is not None and any(
+            isinstance(first[0], str) != isinstance(b, str) for b in bounds
+        ):
+            raise ValueError(
+                f"range bounds {bounds!r} do not match the recorded "
+                f"stats type for {c!r} (e.g. {first!r})"
+            )
+    keep = [
+        os.path.join(root, rel)
+        for rel, per in files.items()
+        if (sel_dirs is None or rel.rsplit("/", 1)[0] in sel_dirs)
+        and not any(
+            (per or {}).get(c) is not None
+            and (per[c][1] < lo or per[c][0] > hi)
+            for c, (lo, hi) in ranges.items()
+        )
+    ]
+    preds = [
+        F.col(c).between(F.lit(lo), F.lit(hi))
+        for c, (lo, hi) in ranges.items()
+    ]
+    return keep, preds
 
 
 def commit_meta(root: str, n: Optional[int] = None) -> dict:
@@ -929,28 +945,10 @@ def _stats_payload(
     meta: Optional[dict],
     stats_cols: Optional[Sequence[str]] = None,
 ) -> dict:
-    """Marker payload = caller metadata plus (when requested) the
-    per-file footer statistics — shared by both commit paths.
-    ``stats_cols`` records MULTI-column per-file min/max (round 12,
-    r11 VERDICT item 4) under ``file_stats_cols``; one footer pass
-    collects every requested column."""
+    """Marker payload of a plain snapshot commit: caller metadata plus
+    (when requested) the file statistics of version ``n``'s files."""
     payload = dict(meta or {})
-    if stats_key:
-        payload["file_stats"] = {
-            "key": stats_key,
-            "files": _collect_file_stats(root, n, stats_key),
-        }
-    if stats_cols:
-        cols = list(stats_cols)
-        snap = os.path.join(root, f"v{n}")
-        files = {
-            f"v{n}/{fname}": _file_minmax_multi(
-                os.path.join(snap, fname), cols
-            )
-            for fname in sorted(os.listdir(snap))
-            if fname.endswith(".parquet")
-        }
-        payload["file_stats_cols"] = {"cols": cols, "files": files}
+    payload.update(_file_stats(root, [f"v{n}"], stats_key, stats_cols))
     return payload
 
 
@@ -973,60 +971,13 @@ def _jsonable(v):
     return None
 
 
-def _collect_file_stats(root: str, n: int, key: str) -> Dict[str, list]:
-    """Per-file ``[min, max]`` of ``key`` for version ``n``'s parquet
-    files, read from the parquet FOOTERS (no data pages touched) — the
-    ``sink_sorted_skipping`` discipline applied at commit time so the
-    stats ride in the commit marker and readers prune files from one
-    driver-side JSON read.  A file whose footer lacks usable min/max for
-    the key maps to ``None`` (readers keep it conservatively)."""
-    snap = os.path.join(root, f"v{n}")
-    out: Dict[str, list] = {}
-    for fname in sorted(os.listdir(snap)):
-        if not fname.endswith(".parquet"):
-            continue
-        out[f"v{n}/{fname}"] = _file_minmax(
-            os.path.join(snap, fname), key
-        )
-    return out
-
-
-def _file_minmax(path: str, key: str) -> "Optional[list]":
-    """Footer ``[min, max]`` of ``key`` for one parquet file, or ``None``
-    when unusable (missing column stats, or a logical type with no
-    order-preserving JSON form / no pyarrow extraction — e.g. Decimal
-    raises ArrowNotImplementedError): readers keep such files
-    conservatively."""
-    import pyarrow.parquet as pq
-
-    md = pq.ParquetFile(path).metadata
-    mins, maxs = [], []
-    for rg in range(md.num_row_groups):
-        grp = md.row_group(rg)
-        st = None
-        for ci in range(grp.num_columns):
-            col = grp.column(ci)
-            if col.path_in_schema == key:
-                st = col.statistics
-                break
-        if st is None or not st.has_min_max:
-            return None
-        try:
-            mins.append(st.min)
-            maxs.append(st.max)
-        except Exception:  # noqa: BLE001 — unextractable stats
-            return None
-    if not mins:
-        return None
-    lo, hi = _jsonable(min(mins)), _jsonable(max(maxs))
-    return [lo, hi] if lo is not None and hi is not None else None
-
-
-def _file_minmax_multi(path: str, cols: Sequence[str]) -> dict:
-    """Per-column footer ``[min, max]`` for one parquet file over a
-    column LIST — one metadata read collecting every requested column
-    (``_file_minmax``'s contract per column: ``None`` for unusable
-    stats, kept conservatively by readers)."""
+def _footer_minmax(path: str, cols: Sequence[str]) -> dict:
+    """Per-column ``[min, max]`` of one parquet file, read from its
+    FOOTER (one metadata read, no data pages).  A column maps to
+    ``None`` when its stats are unusable — missing in some row group,
+    or a logical type with no order-preserving JSON form / no pyarrow
+    extraction (e.g. Decimal raises ArrowNotImplementedError); readers
+    keep such files conservatively."""
     import pyarrow.parquet as pq
 
     md = pq.ParquetFile(path).metadata
@@ -1038,7 +989,7 @@ def _file_minmax_multi(path: str, cols: Sequence[str]) -> dict:
             col = grp.column(ci)
             if col.path_in_schema in acc:
                 by_path[col.path_in_schema] = col.statistics
-        for c in cols:
+        for c in acc:
             if acc[c] is None:
                 continue
             st = by_path.get(c)
@@ -1050,50 +1001,52 @@ def _file_minmax_multi(path: str, cols: Sequence[str]) -> dict:
                 acc[c][1].append(st.max)
             except Exception:  # noqa: BLE001 — unextractable stats
                 acc[c] = None
+    out: dict = {}
+    for c, mm in acc.items():
+        out[c] = None
+        if mm is not None and mm[0]:
+            lo, hi = _jsonable(min(mm[0])), _jsonable(max(mm[1]))
+            if lo is not None and hi is not None:
+                out[c] = [lo, hi]
+    return out
+
+
+def _file_stats(
+    root: str,
+    rel_dirs: Sequence[str],
+    stats_key: Optional[str],
+    stats_cols: Optional[Sequence[str]],
+) -> dict:
+    """The marker's file-statistics fields for every parquet file under
+    ``rel_dirs`` (paths relative to ``root``): ``file_stats`` —
+    ``{"key": k, "files": {rel: [min, max]}}`` — for ``stats_key``, and
+    ``file_stats_cols`` — ``{"cols": [...], "files": {rel: {col: [min,
+    max]}}}`` — for ``stats_cols``.  Both families come from ONE footer
+    read per file, and both ride in the commit marker so readers prune
+    files from one driver-side JSON read (``_prune_files``)."""
+    cols = ([stats_key] if stats_key else []) + list(stats_cols or [])
+    if not cols:
+        return {}
+    per_file = {
+        f"{rel}/{fname}": _footer_minmax(os.path.join(root, rel, fname), cols)
+        for rel in rel_dirs
+        for fname in sorted(os.listdir(os.path.join(root, rel)))
+        if fname.endswith(".parquet")
+    }
     out = {}
-    for c in cols:
-        if acc[c] is None or not acc[c][0]:
-            out[c] = None
-            continue
-        lo, hi = _jsonable(min(acc[c][0])), _jsonable(max(acc[c][1]))
-        out[c] = [lo, hi] if lo is not None and hi is not None else None
-    return out
-
-
-def _collect_bucket_file_stats(
-    root: str, rel_dirs: "Sequence[str]", key: str
-) -> Dict[str, list]:
-    """Per-file ``[min, max]`` of ``key`` for every parquet file under
-    the given bucket directories (relative paths) — the bucketed-layout
-    counterpart of ``_collect_file_stats``, so range skipping composes
-    with bucket pruning."""
-    out: Dict[str, list] = {}
-    for rel in rel_dirs:
-        d = os.path.join(root, rel)
-        for fname in sorted(os.listdir(d)):
-            if fname.endswith(".parquet"):
-                out[f"{rel}/{fname}"] = _file_minmax(
-                    os.path.join(d, fname), key
-                )
-    return out
-
-
-def _collect_bucket_file_stats_multi(
-    root: str, rel_dirs: "Sequence[str]", cols: "List[str]"
-) -> Dict[str, dict]:
-    """Per-file per-column footer ``[min, max]`` over a column LIST for
-    every parquet file under the given bucket directories — the
-    bucketed-layout counterpart of the ``stats_cols`` collection, so
-    multi-column conjunction skipping composes with bucket pruning
-    (round 13)."""
-    out: Dict[str, dict] = {}
-    for rel in rel_dirs:
-        d = os.path.join(root, rel)
-        for fname in sorted(os.listdir(d)):
-            if fname.endswith(".parquet"):
-                out[f"{rel}/{fname}"] = _file_minmax_multi(
-                    os.path.join(d, fname), cols
-                )
+    if stats_key:
+        out["file_stats"] = {
+            "key": stats_key,
+            "files": {rel: mm[stats_key] for rel, mm in per_file.items()},
+        }
+    if stats_cols:
+        out["file_stats_cols"] = {
+            "cols": list(stats_cols),
+            "files": {
+                rel: {c: mm[c] for c in stats_cols}
+                for rel, mm in per_file.items()
+            },
+        }
     return out
 
 
@@ -1746,34 +1699,6 @@ def _rename_snapshot(tmp: str, snap: str) -> None:
             raise
 
 
-def _clear_uncommitted_snapshot(root: str, n: int) -> None:
-    """Remove an orphan ``v<n>`` left by a crashed single-writer step
-    (dir present, marker absent) so the caller writes FRESH data for
-    its own marker.  The data-deriving commit paths (bucketed MERGE,
-    compaction, MoR deletes) must never attach a new marker to a stale
-    dir: the dir may hold a DIFFERENT call's output — a different
-    predicate's delete keys, a different max_files compaction — which
-    is the round-10 'marker over another call's data' silent-wrong-data
-    class, and for bucketed MERGE the stray-bucket guard would
-    otherwise reject the stale dir FOREVER (vacuum can't sweep an
-    orphan at a never-superseded version number), wedging the table
-    (round-11 review).  A marker-less dir is invisible to every reader
-    and these paths are documented single-writer, so removal is safe."""
-    snap = os.path.join(root, f"v{n}")
-    if os.path.isdir(snap) and not _marker_exists(root, n):
-        shutil.rmtree(snap, ignore_errors=True)
-        if os.path.isdir(snap):
-            # A partially-failed removal must not fall through: the
-            # caller's `if not os.path.isdir(snap)` would skip ITS write
-            # and attach a fresh marker to this stale orphan — the exact
-            # silent-wrong-data class this helper exists to prevent
-            # (round-12 ADVICE).
-            raise OSError(
-                f"could not clear stale uncommitted snapshot {snap} — "
-                "refusing to risk committing a marker over foreign data"
-            )
-
-
 def commit_bucketed(
     df: SDF,
     root: str,
@@ -1791,18 +1716,18 @@ def commit_bucketed(
     is laid out as one directory per key bucket
     (``v<n>/_mt_bucket=<b>/``), and the commit marker carries a manifest
     ``{bucket: relative path}`` — the indirection that lets a later
-    ``merge_into_bucketed`` rewrite only touched buckets and reference
-    the rest.  Commit protocol (tmp-write + rename, then marker) and
-    crash behavior are identical to ``commit_snapshot``.
+    ``merge_into_bucketed_exclusive`` rewrite only touched buckets and
+    reference the rest.  Commit protocol (tmp-write + rename, then
+    marker) and crash behavior are identical to ``commit_snapshot``.
 
     ``stats_key=<col>`` composes range skipping WITH the bucketed
     layout (round 11): the write range-partitions on (bucket,
     stats_key) and sorts within partitions, so each bucket's files hold
     disjoint stats-key ranges, and every file's footer min/max rides in
     the marker.  ``read_bucketed(key_range=...)`` then prunes files
-    across all bucket dirs — and a later ``merge_into_bucketed``
-    carries the spec forward, refreshing stats for rewritten buckets
-    and keeping the recorded entries for by-reference ones.  This is
+    across all bucket dirs — and a later bucketed MERGE carries the
+    spec forward, refreshing stats for rewritten buckets and keeping
+    the recorded entries for by-reference ones.  This is
     the Delta/Iceberg "partition by bucket, order by sort key" layout
     reduced to its essence.
 
@@ -1880,20 +1805,9 @@ def commit_bucketed(
         },
         **(meta or {}),
     }
-    if stats_key:
-        payload["file_stats"] = {
-            "key": stats_key,
-            "files": _collect_bucket_file_stats(
-                root, sorted(man.values()), stats_key
-            ),
-        }
-    if stats_cols:
-        payload["file_stats_cols"] = {
-            "cols": list(stats_cols),
-            "files": _collect_bucket_file_stats_multi(
-                root, sorted(man.values()), list(stats_cols)
-            ),
-        }
+    payload.update(
+        _file_stats(root, sorted(man.values()), stats_key, stats_cols)
+    )
     _write_marker(root, n, payload)
 
 
@@ -2041,88 +1955,24 @@ def read_bucketed(
             F.col(c).eqNullSafe(F.lit(v).cast(dtypes[c]))
             for c, v in key_equals.items()
         ]
-    if ranges:
-        stats_c = meta.get("file_stats_cols")
-        if not stats_c:
-            raise ValueError(
-                f"bucketed version of {root} has no multi-column file "
-                "statistics — commit with stats_cols= to enable ranges "
-                "reads"
-            )
-        unknown = sorted(set(ranges) - set(stats_c["cols"]))
-        if unknown:
-            raise ValueError(
-                f"ranges constrain column(s) {unknown} with no recorded "
-                f"statistics (recorded: {stats_c['cols']})"
-            )
-        for c, (lo, hi) in ranges.items():
-            first = next(
-                (
-                    per.get(c)
-                    for per in stats_c["files"].values()
-                    if per and per.get(c) is not None
-                ),
-                None,
-            )
-            if first is not None:
-                _check_range_types(
-                    {"key": c, "files": {"_": first}}, lo, hi, (lo, hi)
-                )
-        sel_dirs = tuple(man_sel.values())
-        keep = []
-        for rel, per_col in stats_c["files"].items():
-            if rel.rsplit("/", 1)[0] not in sel_dirs:
-                continue
-            ok = True
-            for c, (lo, hi) in ranges.items():
-                mm = (per_col or {}).get(c)
-                if mm is not None and (mm[1] < lo or mm[0] > hi):
-                    ok = False
-                    break
-            if ok:
-                keep.append(os.path.join(root, rel))
+    if ranges or key_range is not None:
+        # range skipping over the (possibly bucket-pruned) file set: the
+        # marker's per-file stats cover by-reference files too (merges
+        # carry recorded entries forward), so one driver-side JSON read
+        # decides the scan set across every physical version dir
+        keep, preds = _prune_files(
+            root, meta, f"bucketed version of {root}", key_range, ranges,
+            sel_dirs=set(man_sel.values()),
+        )
         if not keep:
             return sample.limit(0)
-        df = spark.read.parquet(*keep)
-        for c, (lo, hi) in ranges.items():
-            df = df.where(F.col(c).between(F.lit(lo), F.lit(hi)))
-        for r in residuals:
-            df = df.where(r)
-        return df
-    if key_range is None:
-        paths = [
+        residuals = preds + residuals
+    else:
+        keep = [
             os.path.join(root, man_sel[b])
             for b in sorted(man_sel, key=lambda x: int(x))
         ]
-        df = spark.read.parquet(*paths)
-        for r in residuals:
-            df = df.where(r)
-        return df
-    # range skipping over the (possibly bucket-pruned) file set: the
-    # marker's per-file stats cover by-reference files too (merges
-    # carry recorded entries forward), so one driver-side JSON read
-    # decides the scan set across every physical version dir
-    stats = meta.get("file_stats")
-    if not stats:
-        raise ValueError(
-            f"bucketed version of {root} has no file statistics — commit "
-            "with stats_key= to enable key_range reads"
-        )
-    key = stats["key"]
-    lo, hi = key_range
-    _check_range_types(stats, lo, hi, key_range)
-    sel_dirs = tuple(man_sel.values())
-    keep = [
-        os.path.join(root, rel)
-        for rel, mm in stats["files"].items()
-        if rel.rsplit("/", 1)[0] in sel_dirs
-        and (mm is None or not (mm[1] < lo or mm[0] > hi))
-    ]
-    if not keep:
-        return sample.limit(0)
-    df = spark.read.parquet(*keep).where(
-        F.col(key).between(F.lit(lo), F.lit(hi))
-    )
+    df = spark.read.parquet(*keep)
     for r in residuals:
         df = df.where(r)
     return df
@@ -2171,137 +2021,6 @@ def _touched_buckets(source: SDF, expr: str, keys: List[str]) -> "set[str]":
             "rebuild the table with hashed bucketing"
         )
     return {str(b) for b in touched}
-
-
-def merge_into_bucketed(
-    spark: SparkSession,
-    root: str,
-    source: SDF,
-    matched_update: Dict[str, str],
-    not_matched_insert: Dict[str, str],
-    meta: Optional[dict] = None,
-    strict_source_keys: bool = False,
-    matched_delete: Optional[str] = None,
-) -> int:
-    """Bucket-scoped copy-on-write MERGE (round 11): run ``merge_into``
-    against ONLY the buckets the source touches, publish the result as
-    the next version, and carry every untouched bucket into the new
-    version's manifest BY REFERENCE (same physical files — zero bytes
-    rewritten, zero bytes read).
-
-    Correctness: the bucket function is applied to the MERGE key, so a
-    source row's output — matched update or insert — lands by
-    construction in a bucket the source touches; untouched buckets
-    contain only target-only rows, which MERGE passes through unchanged.
-    The join key and bucket spec come from the table's own commit
-    metadata (a caller cannot merge on a non-bucket key and silently
-    break the layout invariant).
-
-    Scale: this is the write-amplification fix the table-granularity
-    path documents — a MERGE whose change set hits k of B buckets reads
-    and rewrites k/B of the table instead of all of it.  The touched-
-    bucket set is computed with one map-side-combined distinct over the
-    source's derived bucket id (≤ B tiny rows to the driver).
-
-    ``matched_delete`` is supported (a matched row's bucket is touched
-    by construction, so the delete lands inside the rewrite set);
-    ``not_matched_by_source_delete`` is deliberately NOT — it targets
-    rows whose buckets the source never touches, which would require a
-    full-table rewrite and silently forfeit the k/B bound.  Run that
-    clause through the table-granularity ``merge_into`` +
-    ``commit_bucketed`` path, which prices the full rewrite honestly.
-
-    Returns the committed version number."""
-    base = latest_version(root)
-    if base is None:
-        raise FileNotFoundError(f"no committed version under {root}")
-    bmeta = commit_meta(root, base)
-    man, spec = bmeta.get("manifest"), bmeta.get("bucket")
-    if not man or not spec:
-        raise ValueError(
-            f"version {base} of {root} is not bucketed — use merge_into + "
-            "commit_snapshot"
-        )
-    keys, expr = list(spec["on"]), spec["expr"]
-    source, sample = _cast_source_to_table(spark, root, man, keys, source)
-    touched_set = _touched_buckets(source, expr, keys)
-    n_new = base + 1
-    while _is_fence_marker(root, n_new):
-        # fenced dead-claimant slots above the latest commit (a fencer
-        # that crashed before publishing its own commit) are
-        # permanently retired — skip them exactly like the OCC claim
-        # loop does (round-13 review: writing here would attach a
-        # marker to the dead claimant's orphan data)
-        n_new += 1
-    # a marker-less orphan at n_new (crashed merge OR crashed
-    # compaction) may hold foreign buckets — reusing it would trip the
-    # stray-bucket guard forever and wedge the table (round-11 review);
-    # clear it and write this merge's own output
-    _clear_uncommitted_snapshot(root, n_new)
-    snap = os.path.join(root, f"v{n_new}")
-    tgt_paths = [
-        os.path.join(root, man[b]) for b in sorted(touched_set & set(man))
-    ]
-    if tgt_paths:
-        tgt = spark.read.parquet(*tgt_paths)
-    else:
-        # no touched bucket has target data: all-insert merge against an
-        # empty target with the table's schema (footer-only read)
-        tgt = sample.limit(0)
-    if touched_set:
-        merged = merge_into(
-            tgt,
-            source,
-            on=keys if len(keys) > 1 else keys[0],
-            matched_update=matched_update,
-            not_matched_insert=not_matched_insert,
-            strict_source_keys=strict_source_keys,
-            matched_delete=matched_delete,
-        )
-        if not os.path.isdir(snap):
-            tmp = f"{snap}.tmp{os.getpid()}"
-            # rewritten buckets keep the table's recorded sort layout
-            # (stats-key sort or within-bucket Z-order) so refreshed
-            # stats stay as tight as the original commit's
-            shaped = _shape_bucket_rewrite(
-                merged.withColumn(_BUCKET_COL, F.expr(expr)), spec
-            )
-            shaped.write.mode("overwrite").partitionBy(_BUCKET_COL).parquet(
-                tmp
-            )
-            _rename_snapshot(tmp, snap)
-    else:
-        os.makedirs(snap, exist_ok=True)  # empty change set: no-op version
-    written = _manifest_from_snapshot(root, n_new)
-    stray = sorted(set(written) - touched_set)
-    if stray:
-        # belt-and-braces for the invariant above: a merged row landing
-        # outside the touched set would shadow a by-reference bucket
-        # with a partial rewrite — refuse to commit (marker unwritten,
-        # snapshot invisible) rather than lose data silently
-        raise ValueError(
-            f"bucketed MERGE produced rows in untouched bucket(s) "
-            f"{stray} — bucket function/type drift; commit aborted "
-            "before the marker"
-        )
-    new_man = {b: rel for b, rel in man.items() if b not in touched_set}
-    new_man.update(written)
-    payload = {
-        "manifest": new_man,
-        "bucket": spec,
-        "base_version": base,
-        "touched_buckets": sorted(touched_set),
-        **(meta or {}),
-    }
-    # carry every recorded stats family forward (round 11 / round 13):
-    # fresh footer min/max for rewritten buckets, recorded entries for
-    # by-reference ones — so key_range= AND ranges= reads keep working
-    # across merges, as the commit_bucketed docstring promises
-    _apply_carried_stats(
-        payload, root, bmeta, new_man, sorted(written.values()), spec
-    )
-    _write_marker(root, n_new, payload)
-    return n_new
 
 
 def commit_mor_delete(
@@ -2968,80 +2687,6 @@ def compact_buckets(
         return n
 
 
-def _carried_bucket_stats(
-    root: str,
-    base_meta: dict,
-    new_man: Dict[str, str],
-    rewritten_rel_dirs: "Sequence[str]",
-    stats_key: str,
-) -> dict:
-    """File statistics for a bucketed commit that rewrote SOME buckets:
-    fresh footer min/max for the rewritten directories, base-marker
-    entries carried forward for by-reference ones (their files are
-    immutable, so the recorded stats stay exact)."""
-    old = (base_meta.get("file_stats") or {}).get("files", {})
-    kept_dirs = set(new_man.values()) - set(rewritten_rel_dirs)
-    files = {
-        rel: mm
-        for rel, mm in old.items()
-        if rel.rsplit("/", 1)[0] in kept_dirs
-    }
-    files.update(
-        _collect_bucket_file_stats(root, rewritten_rel_dirs, stats_key)
-    )
-    # Every manifest dir must be covered: key_range reads prune by
-    # iterating stats['files'] ONLY, so a base marker with incomplete
-    # file_stats (e.g. a merge committed by code predating the stats
-    # carry) would yield range reads that silently drop rows from
-    # uncovered buckets — fail the commit loudly instead (round-12
-    # ADVICE).
-    covered = {rel.rsplit("/", 1)[0] for rel in files}
-    gap = sorted(set(new_man.values()) - covered)
-    if gap:
-        raise ValueError(
-            f"carried file statistics cover no files in manifest dir(s) "
-            f"{gap} — the base marker's file_stats are incomplete; "
-            "recommit the base with stats (e.g. compact_mor/compact_"
-            "buckets with stats_key) before stats-carrying commits"
-        )
-    return {"key": stats_key, "files": files}
-
-
-def _carried_bucket_stats_cols(
-    root: str,
-    base_meta: dict,
-    new_man: Dict[str, str],
-    rewritten_rel_dirs: "Sequence[str]",
-    cols: "List[str]",
-) -> dict:
-    """``file_stats_cols`` carry for a bucketed commit that rewrote
-    SOME buckets (round 13): fresh multi-column footer min/max for the
-    rewritten directories, base-marker entries carried forward for
-    by-reference ones — the multi-column twin of
-    ``_carried_bucket_stats``, with the same every-dir-covered
-    invariant (conjunction pruning iterates the stats map only)."""
-    old = (base_meta.get("file_stats_cols") or {}).get("files", {})
-    kept_dirs = set(new_man.values()) - set(rewritten_rel_dirs)
-    files = {
-        rel: mm
-        for rel, mm in old.items()
-        if rel.rsplit("/", 1)[0] in kept_dirs
-    }
-    files.update(
-        _collect_bucket_file_stats_multi(root, rewritten_rel_dirs, cols)
-    )
-    covered = {rel.rsplit("/", 1)[0] for rel in files}
-    gap = sorted(set(new_man.values()) - covered)
-    if gap:
-        raise ValueError(
-            f"carried multi-column statistics cover no files in "
-            f"manifest dir(s) {gap} — the base marker's "
-            "file_stats_cols are incomplete; recommit the base with "
-            "stats_cols before stats-carrying commits"
-        )
-    return {"cols": list(cols), "files": files}
-
-
 def _apply_carried_stats(
     payload: dict,
     root: str,
@@ -3050,21 +2695,43 @@ def _apply_carried_stats(
     rewritten_rel_dirs: "Sequence[str]",
     spec: dict,
 ) -> None:
-    """Attach whichever file-statistics families the table's bucket
-    spec records (``stats_key`` → ``file_stats``, ``stats_cols`` →
-    ``file_stats_cols``) to a bucket-scoped commit's payload — ONE
-    call site per commit kind so a new stats family can never again
-    land in some rewrite paths only."""
-    if spec.get("stats_key"):
-        payload["file_stats"] = _carried_bucket_stats(
-            root, base_meta, new_man, rewritten_rel_dirs,
-            spec["stats_key"],
-        )
-    if spec.get("stats_cols"):
-        payload["file_stats_cols"] = _carried_bucket_stats_cols(
-            root, base_meta, new_man, rewritten_rel_dirs,
-            list(spec["stats_cols"]),
-        )
+    """Attach the file statistics the table's bucket spec records
+    (``stats_key`` → ``file_stats``, ``stats_cols`` →
+    ``file_stats_cols``) to a commit that rewrote SOME buckets: fresh
+    footer min/max for the rewritten directories, base-marker entries
+    carried forward for by-reference ones (their files are immutable,
+    so the recorded stats stay exact) — one carry for every stats
+    family and every bucket-scoped commit kind."""
+    fresh = _file_stats(
+        root, rewritten_rel_dirs, spec.get("stats_key"),
+        spec.get("stats_cols"),
+    )
+    kept_dirs = set(new_man.values()) - set(rewritten_rel_dirs)
+    for field, fam in fresh.items():
+        old = (base_meta.get(field) or {}).get("files", {})
+        files = {
+            rel: mm
+            for rel, mm in old.items()
+            if rel.rsplit("/", 1)[0] in kept_dirs
+        }
+        files.update(fam["files"])
+        # Every manifest dir must be covered: range reads prune by
+        # iterating the stats map ONLY, so a base marker with
+        # incomplete stats (e.g. a merge committed by code predating
+        # the stats carry) would yield range reads that silently drop
+        # rows from uncovered buckets — fail the commit loudly instead
+        # (round-12 ADVICE).
+        covered = {rel.rsplit("/", 1)[0] for rel in files}
+        gap = sorted(set(new_man.values()) - covered)
+        if gap:
+            raise ValueError(
+                f"carried {field} cover no files in manifest dir(s) "
+                f"{gap} — the base marker's {field} are incomplete; "
+                "recommit the base with stats (e.g. compact_mor/"
+                "compact_buckets) before stats-carrying commits"
+            )
+        fam["files"] = files
+        payload[field] = fam
 
 
 def commit_snapshot_exclusive(
@@ -3253,10 +2920,9 @@ def restore_table(
         "base_version": newest_meta.get("version", base),
         **payload_meta,
     }
-    if tmeta.get("file_stats"):
-        payload["file_stats"] = tmeta["file_stats"]
-    if tmeta.get("file_stats_cols"):
-        payload["file_stats_cols"] = tmeta["file_stats_cols"]
+    for field in ("file_stats", "file_stats_cols"):
+        if tmeta.get(field):
+            payload[field] = tmeta[field]
     _publish_exclusive(root, n, payload)
     return n
 
@@ -3330,24 +2996,16 @@ def clone_shallow(
         },
         **(meta or {}),
     }
-    stats = smeta.get("file_stats")
-    if stats:
-        payload["file_stats"] = {
-            "key": stats["key"],
-            "files": {
-                os.path.normpath(os.path.join(rel_src, rel)): mm
-                for rel, mm in stats["files"].items()
-            },
-        }
-    stats_c = smeta.get("file_stats_cols")
-    if stats_c:
-        payload["file_stats_cols"] = {
-            "cols": stats_c["cols"],
-            "files": {
-                os.path.normpath(os.path.join(rel_src, rel)): mm
-                for rel, mm in stats_c["files"].items()
-            },
-        }
+    for field in ("file_stats", "file_stats_cols"):
+        stats = smeta.get(field)
+        if stats:
+            payload[field] = {
+                **stats,
+                "files": {
+                    os.path.normpath(os.path.join(rel_src, rel)): mm
+                    for rel, mm in stats["files"].items()
+                },
+            }
     # register BEFORE the marker (round 13): a crash between the two
     # leaves a harmless stale registry line (no commits → no refs),
     # never an unprotected live clone.  O_APPEND one-line write —
@@ -3483,18 +3141,41 @@ def merge_into_bucketed_exclusive(
     max_retries: int = 5,
     marker_timeout: float = 30.0,
 ) -> int:
-    """MULTI-WRITER bucket-scoped MERGE with OCC write-set conflict
-    detection (round 12, r11 VERDICT item 1) — the lost-update fix for
-    concurrent MERGEs that ``commit_snapshot_exclusive`` alone cannot
-    provide (it sequences snapshots durably, but a merge that lost the
-    claim still derived its state from a stale base).
+    """Bucket-scoped copy-on-write MERGE, safe under concurrent writers
+    (round 11; OCC since round 12): run ``merge_into`` against ONLY the
+    buckets the source touches, publish the result as the next
+    version, and carry every untouched bucket into the new version's
+    manifest BY REFERENCE (same physical files — zero bytes rewritten,
+    zero bytes read).  A MERGE whose change set hits k of B buckets
+    reads and rewrites k/B of the table; an empty change set touches
+    none and commits the base's manifest as the next version.
+
+    Correctness: the bucket function is applied to the MERGE key, so a
+    source row's output — matched update or insert — lands by
+    construction in a bucket the source touches; untouched buckets
+    contain only target-only rows, which MERGE passes through
+    unchanged.  The join key and bucket spec come from the table's own
+    commit metadata (a caller cannot merge on a non-bucket key and
+    silently break the layout invariant), and a merged row landing
+    outside the touched set aborts the commit before the claim.
+    ``matched_delete`` is supported (a matched row's bucket is touched
+    by construction); ``not_matched_by_source_delete`` is deliberately
+    NOT — it targets rows in buckets the source never touches, which
+    would forfeit the k/B bound.  Run that clause through the
+    table-granularity ``merge_into`` + ``commit_bucketed`` path, which
+    prices the full rewrite honestly.
+
+    The OCC write-set check is the lost-update fix for concurrent
+    MERGEs that ``commit_snapshot_exclusive`` alone cannot provide (it
+    sequences snapshots durably, but a merge that lost the claim still
+    derived its state from a stale base).
 
     Protocol, per attempt:
 
     1. read ``base = latest_version`` and compute the merge against
        base's touched buckets, writing the rewritten buckets to a
-       writer-private temp dir (clauses and layout identical to
-       ``merge_into_bucketed``);
+       writer-private temp dir, laid out in the table's recorded sort
+       discipline (stats-key sort or within-bucket Z-order);
     2. claim the next version with an if-absent ``_claims/<n>`` put on
        the CommitStore (round 14 — conditional put, object-store
        ready); the claim winner then materializes ``v<n>`` from the
@@ -3520,7 +3201,8 @@ def merge_into_bucketed_exclusive(
        ``read_base`` (the version the merge was computed from),
        ``base_version`` (the version it chains after) and
        ``touched_buckets`` (this writer's write-set, which is what
-       future rivals check against).
+       future rivals check against), and the table's file statistics
+       (fresh for rewritten buckets, carried for referenced ones).
 
     This is Delta/Iceberg OCC reduced to its essence: optimistic
     execution, conflict detection on logical write-sets at commit time,
@@ -3537,8 +3219,11 @@ def merge_into_bucketed_exclusive(
     overlap, where it is the price of correctness.
 
     Returns the committed version number."""
-    import threading
+    import uuid
 
+    # per-call temp names: a rival merge on the same thread (e.g. a
+    # nested call) must never write into this call's temp dir
+    call = uuid.uuid4().hex
     attempts = 0
     checked_keys: "Optional[List[Tuple[str, str]]]" = None
     while True:
@@ -3589,7 +3274,7 @@ def merge_into_bucketed_exclusive(
         )
         tmp = os.path.join(
             root,
-            f".tmpm{os.getpid()}-{threading.get_ident()}-{base}-{attempts}",
+            f".tmpm{os.getpid()}-{call}-{base}-{attempts}",
         )
         shaped = _shape_bucket_rewrite(
             merged.withColumn(_BUCKET_COL, F.expr(expr)), spec

@@ -162,9 +162,11 @@ def laggy_store():
 
 
 def test_single_writer_commits_survive_total_ack_loss(spark, tmp_path):
-    """With EVERY put's ack lost, commit_snapshot / commit_bucketed /
-    single-writer merge still commit exactly once: _write_marker reads
-    the occupant back and recognises its own writer_nonce."""
+    """With EVERY put's ack lost, commit_snapshot / commit_bucketed
+    still commit exactly once: _write_marker reads the occupant back
+    and recognises its own writer_nonce; the bucketed merge on top
+    commits once through the same read-back on its claim and
+    publish."""
     import dataframe_expressions_spark.sources.mergetable as mt
 
     _install(dict(ack_loss_every=1))
@@ -175,7 +177,7 @@ def test_single_writer_commits_survive_total_ack_loss(spark, tmp_path):
         assert mt.latest_version(root) == 0
         broot = str(tmp_path / "bkt")
         tm._mk_occ_base(spark, broot)
-        mt.merge_into_bucketed(
+        mt.merge_into_bucketed_exclusive(
             spark, broot, tm._occ_chg(spark, [0], 5.0), **tm._OCC_CLAUSES
         )
         assert mt.latest_version(broot) == 1

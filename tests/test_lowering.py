@@ -1249,9 +1249,10 @@ def test_auto_persist_fires_on_second_action(spark, monkeypatch):
     bare filtered scan (pushdown-friendly) and a kill-switched session
     never do."""
     from dataframe_expressions_spark import select_from, unpersist_points
+    from dataframe_expressions_spark.plans import lowering as L
     from dataframe_expressions_spark.sources.tables import load_table as lt
 
-    monkeypatch.setenv("SPARK_GRAFT_AUTO_PERSIST_MIN_BYTES", "1")
+    monkeypatch.setattr(L, "AUTO_PERSIST_MIN_BYTES", 1)
     ev = lt(spark, SF_SMOKE, "events")
     try:
         d = DataFrame()
@@ -1327,7 +1328,7 @@ def test_auto_persist_once_per_session_and_no_alias_false_positive(
     from dataframe_expressions_spark.plans import lowering as L
     from dataframe_expressions_spark.sources.tables import load_table as lt
 
-    monkeypatch.setenv("SPARK_GRAFT_AUTO_PERSIST_MIN_BYTES", "1")
+    monkeypatch.setattr(L, "AUTO_PERSIST_MIN_BYTES", 1)
     ev = lt(spark, SF_SMOKE, "events")
     cust = lt(spark, SF_SMOKE, "customer")
     try:
@@ -1585,13 +1586,13 @@ def test_changes_verb_is_feed_since(spark, tmp_path):
         [(k, float(k)) for k in range(8)], "k long, val double"
     )
     mt.commit_bucketed(v0, root, 0, on="k", n_buckets=2, hashed=False)
-    mt.merge_into_bucketed(
+    mt.merge_into_bucketed_exclusive(
         spark, root,
         spark.createDataFrame([(0, 5.0), (9, 7.0)], "k long, amt double"),
         matched_update={"val": "t.val + s.amt"},
         not_matched_insert={"val": "s.amt"},
     )
-    mt.merge_into_bucketed(
+    mt.merge_into_bucketed_exclusive(
         spark, root,
         spark.createDataFrame([(1, 100.0)], "k long, amt double"),
         matched_update={"val": "t.val + s.amt"},
@@ -1656,7 +1657,7 @@ def test_changes_stream_binds_table_stream_source(spark, tmp_path):
         [(k, float(k)) for k in range(8)], "k long, val double"
     )
     mt.commit_bucketed(v0, root, 0, on="k", n_buckets=2, hashed=False)
-    mt.merge_into_bucketed(
+    mt.merge_into_bucketed_exclusive(
         spark, root,
         spark.createDataFrame([(0, 5.0), (9, 7.0)], "k long, amt double"),
         matched_update={"val": "t.val + s.amt"},
@@ -1781,7 +1782,7 @@ def test_maintenance_verbs_effect_identical_to_direct_calls(spark, tmp_path):
     )
     for root in (ca, cb):
         mt.commit_bucketed(base, root, 0, on="k", n_buckets=4, hashed=False)
-        mt.merge_into_bucketed(spark, root, chg, **clauses)
+        mt.merge_into_bucketed_exclusive(spark, root, chg, **clauses)
     na = mt.compact_buckets(spark, ca, max_files=1)
     backc = select_from({d: probe}, d.compact_buckets(cb, max_files=1))
     nb = mt.latest_version(cb)

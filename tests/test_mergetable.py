@@ -508,7 +508,7 @@ def test_bucketed_merge_rewrites_only_touched_buckets(spark, tmp_path):
     from dataframe_expressions_spark.sources.mergetable import (
         commit_bucketed,
         commit_meta,
-        merge_into_bucketed,
+        merge_into_bucketed_exclusive,
         read_bucketed,
     )
 
@@ -528,7 +528,7 @@ def test_bucketed_merge_rewrites_only_touched_buckets(spark, tmp_path):
     src = spark.createDataFrame(
         [(0, 1.0), (9, 2.0), (18, 3.0), (80, 4.0)], "k long, delta double"
     )
-    n1 = merge_into_bucketed(
+    n1 = merge_into_bucketed_exclusive(
         spark, root, src,
         matched_update={"bal": "t.bal + s.delta"},
         not_matched_insert={"bal": "s.delta"},
@@ -573,7 +573,7 @@ def test_bucketed_merge_chain_and_vacuum_keeps_referenced_buckets(
     from dataframe_expressions_spark.sources.mergetable import (
         commit_bucketed,
         commit_meta,
-        merge_into_bucketed,
+        merge_into_bucketed_exclusive,
         read_bucketed,
         vacuum,
     )
@@ -584,12 +584,12 @@ def test_bucketed_merge_chain_and_vacuum_keeps_referenced_buckets(
     )
     commit_bucketed(tgt, root, 0, on="k", n_buckets=6, hashed=False)
     # merge 1 touches buckets {0}; merge 2 touches {1, 2}
-    merge_into_bucketed(
+    merge_into_bucketed_exclusive(
         spark, root, spark.createDataFrame([(6, 1.0)], "k long, delta double"),
         matched_update={"bal": "t.bal + s.delta"},
         not_matched_insert={"bal": "s.delta"},
     )
-    merge_into_bucketed(
+    merge_into_bucketed_exclusive(
         spark, root,
         spark.createDataFrame([(7, 2.0), (14, 3.0)], "k long, delta double"),
         matched_update={"bal": "t.bal + s.delta"},
@@ -634,7 +634,7 @@ def test_bucketed_guards(spark, tmp_path):
     from dataframe_expressions_spark.sources.mergetable import (
         bucket_expr,
         commit_bucketed,
-        merge_into_bucketed,
+        merge_into_bucketed_exclusive,
         read_bucketed,
     )
 
@@ -650,7 +650,7 @@ def test_bucketed_guards(spark, tmp_path):
     with pytest.raises(ValueError, match="not bucketed"):
         read_bucketed(spark, root, 0)
     with pytest.raises(ValueError, match="not bucketed"):
-        merge_into_bucketed(
+        merge_into_bucketed_exclusive(
             spark, root,
             spark.createDataFrame([(1, 1.0)], "k long, d double"),
             matched_update={}, not_matched_insert={},
@@ -850,7 +850,7 @@ def test_bucket_pruned_point_lookup(spark, tmp_path):
     partial bucket key."""
     from dataframe_expressions_spark.sources.mergetable import (
         commit_bucketed,
-        merge_into_bucketed,
+        merge_into_bucketed_exclusive,
         read_bucketed,
     )
 
@@ -859,7 +859,7 @@ def test_bucket_pruned_point_lookup(spark, tmp_path):
         [(k, float(10 * k)) for k in range(40)], "k long, bal double"
     )
     commit_bucketed(tgt, root, 0, on="k", n_buckets=8, hashed=True)
-    merge_into_bucketed(
+    merge_into_bucketed_exclusive(
         spark, root, spark.createDataFrame([(3, 1.0)], "k long, delta double"),
         matched_update={"bal": "t.bal + s.delta"},
         not_matched_insert={"bal": "s.delta"},
@@ -895,7 +895,7 @@ def test_bucketed_merge_casts_source_key_to_table_type(spark, tmp_path):
     from dataframe_expressions_spark.sources.mergetable import (
         commit_bucketed,
         commit_meta,
-        merge_into_bucketed,
+        merge_into_bucketed_exclusive,
         read_bucketed,
     )
 
@@ -907,7 +907,7 @@ def test_bucketed_merge_casts_source_key_to_table_type(spark, tmp_path):
     narrow = spark.createDataFrame(
         [(3, 1.0), (7, 2.0)], "k int, delta double"  # INT, table is BIGINT
     )
-    merge_into_bucketed(
+    merge_into_bucketed_exclusive(
         spark, root, narrow,
         matched_update={"bal": "t.bal + s.delta"},
         not_matched_insert={"bal": "s.delta"},
@@ -933,7 +933,7 @@ def test_bucketed_null_keys_reject_loudly(spark, tmp_path):
     bucket)."""
     from dataframe_expressions_spark.sources.mergetable import (
         commit_bucketed,
-        merge_into_bucketed,
+        merge_into_bucketed_exclusive,
         read_bucketed,
     )
 
@@ -957,7 +957,7 @@ def test_bucketed_null_keys_reject_loudly(spark, tmp_path):
             spark.createDataFrame([(1, 1.0)], "k long, bal double"),
             root3, 0, on="k", n_buckets=4, hashed=False,
         )
-        merge_into_bucketed(
+        merge_into_bucketed_exclusive(
             spark, root3,
             spark.createDataFrame([(None, 5.0)], "k long, delta double"),
             matched_update={"bal": "s.delta"},
@@ -1195,7 +1195,7 @@ def test_table_changes_bucketed_fast_path_reads_only_diff_buckets(
     set is 2k/B for a k-bucket merge, asserted via inputFiles()."""
     from dataframe_expressions_spark.sources.mergetable import (
         commit_bucketed,
-        merge_into_bucketed,
+        merge_into_bucketed_exclusive,
         table_changes,
     )
 
@@ -1207,7 +1207,7 @@ def test_table_changes_bucketed_fast_path_reads_only_diff_buckets(
     src = spark.createDataFrame(
         [(0, 1.0), (9, 2.0), (80, 4.0)], "k long, delta double"
     )
-    merge_into_bucketed(
+    merge_into_bucketed_exclusive(
         spark, root, src,
         matched_update={"bal": "t.bal + s.delta"},
         not_matched_insert={"bal": "s.delta"},
@@ -1233,7 +1233,7 @@ def test_bucketed_merge_carries_file_stats_forward(spark, tmp_path):
     from dataframe_expressions_spark.sources.mergetable import (
         commit_bucketed,
         commit_meta,
-        merge_into_bucketed,
+        merge_into_bucketed_exclusive,
         read_bucketed,
     )
 
@@ -1245,7 +1245,7 @@ def test_bucketed_merge_carries_file_stats_forward(spark, tmp_path):
         tgt, root, 0, on="k", n_buckets=8, hashed=False, stats_key="k"
     )
     src = spark.createDataFrame([(1, 100.0)], "k long, delta double")
-    merge_into_bucketed(
+    merge_into_bucketed_exclusive(
         spark, root, src,
         matched_update={"bal": "t.bal + s.delta"},
         not_matched_insert={"bal": "s.delta"},
@@ -1383,7 +1383,7 @@ def test_bucketed_merge_matched_delete_confined_to_touched(spark, tmp_path):
     from dataframe_expressions_spark.sources.mergetable import (
         commit_bucketed,
         commit_meta,
-        merge_into_bucketed,
+        merge_into_bucketed_exclusive,
         read_bucketed,
     )
 
@@ -1401,7 +1401,7 @@ def test_bucketed_merge_matched_delete_confined_to_touched(spark, tmp_path):
     src = spark.createDataFrame(
         [(5, 1.0), (2, 1.0), (9, 9.0)], "k long, delta double"
     )
-    merge_into_bucketed(
+    merge_into_bucketed_exclusive(
         spark, root, src,
         matched_update={"bal": "t.bal + s.delta"},
         not_matched_insert={"bal": "s.delta"},
@@ -1559,12 +1559,15 @@ def test_feed_since_caught_up_returns_empty_frame(spark, tmp_path):
 def test_crashed_compaction_orphan_does_not_wedge_merges(spark, tmp_path):
     """A compact_buckets crash between snapshot rename and marker write
     leaves a marker-less orphan at the NEXT version number; a subsequent
-    bucketed MERGE must clear it and commit its own data (round-11
-    review: the stray-bucket guard would otherwise reject the stale dir
-    forever, wedging the table)."""
+    bucketed MERGE must neither adopt it nor stall on it: the claim
+    loop fences the silent slot after marker_timeout, skips it and
+    commits its own data at the next number (round-11 review: the
+    stray-bucket guard would otherwise reject the stale dir forever,
+    wedging the table)."""
     from dataframe_expressions_spark.sources.mergetable import (
+        _is_fence_marker,
         commit_bucketed,
-        merge_into_bucketed,
+        merge_into_bucketed_exclusive,
         read_bucketed,
     )
 
@@ -1585,13 +1588,15 @@ def test_crashed_compaction_orphan_does_not_wedge_merges(spark, tmp_path):
     ).parquet(os.path.join(root, "v1"))
     # merge touching only bucket 0 must succeed, not raise bucket drift
     src = spark.createDataFrame([(0, 100.0)], "k long, delta double")
-    n = merge_into_bucketed(
+    n = merge_into_bucketed_exclusive(
         spark, root, src,
         matched_update={"bal": "t.bal + s.delta"},
         not_matched_insert={"bal": "s.delta"},
+        marker_timeout=0.2,
     )
-    assert n == 1
-    got = {r.k: r.bal for r in read_bucketed(spark, root, 1).collect()}
+    assert n == 2
+    assert _is_fence_marker(root, 1)  # the orphan's number is retired
+    got = {r.k: r.bal for r in read_bucketed(spark, root, 2).collect()}
     assert got[0] == 100.0 and len(got) == 16
 
 
@@ -1701,6 +1706,77 @@ _OCC_CLAUSES = dict(
 )
 
 
+def test_bucketed_merge_empty_change_set_commits_base_manifest(
+    spark, tmp_path
+):
+    """A MERGE whose change set is empty touches no bucket: it still
+    commits base+1, whose manifest is the base's verbatim (no bucket
+    rewritten, none shadowed by an empty rewrite), and the rows are
+    unchanged."""
+    import dataframe_expressions_spark.sources.mergetable as mt
+
+    root = str(tmp_path / "tbl")
+    _mk_occ_base(spark, root)
+    before = sorted(tuple(r) for r in mt.read_bucketed(spark, root).collect())
+    n = mt.merge_into_bucketed_exclusive(
+        spark, root, _occ_chg(spark, [], 1.0), **_OCC_CLAUSES
+    )
+    assert n == 1
+    m0, m1 = mt.commit_meta(root, 0), mt.commit_meta(root, 1)
+    assert m1["manifest"] == m0["manifest"]
+    assert m1["touched_buckets"] == []
+    got = sorted(tuple(r) for r in mt.read_bucketed(spark, root, 1).collect())
+    assert got == before
+
+
+def test_key_range_and_ranges_prune_identically(spark, tmp_path):
+    """key_range=(lo, hi) reads file_stats as a one-column view of what
+    ranges={k: (lo, hi)} reads from file_stats_cols: with both families
+    recorded on the same key, the two reads scan the same files and
+    return the same rows — on a plain table, on a bucketed one, and
+    after a MERGE and a compaction carried the stats forward
+    (including ranges that match no file)."""
+    import dataframe_expressions_spark.sources.mergetable as mt
+
+    df = spark.createDataFrame(
+        [(k, float(k)) for k in range(64)], "k long, val double"
+    )
+    plain, bkt = str(tmp_path / "plain"), str(tmp_path / "bkt")
+    mt.commit_snapshot(
+        df, plain, 0, n_files=4, stats_key="k", stats_cols=["k"]
+    )
+    mt.commit_bucketed(
+        df, bkt, 0, on="k", n_buckets=4, hashed=False, n_files=8,
+        stats_key="k", stats_cols=["k"],
+    )
+    # keys {1, 5, 101} all bucket to 1: one rewritten bucket, three
+    # carried; the compaction then rewrites the still-fragmented ones
+    assert mt.merge_into_bucketed_exclusive(
+        spark, bkt, _occ_chg(spark, [1, 5, 101], 1.0), **_OCC_CLAUSES
+    ) == 1
+    assert mt.compact_buckets(spark, bkt, max_files=1) == 2
+
+    def rows(frame):
+        return sorted(tuple(r) for r in frame.collect())
+
+    reads = [(mt.read_version, plain, 0)] + [
+        (mt.read_bucketed, bkt, v) for v in (0, 1, 2)
+    ]
+    for read, root, v in reads:
+        full = rows(read(spark, root, v))
+        for lo, hi in [(10, 20), (0, 0), (63, 101), (1000, 2000), (-5, -1)]:
+            a = read(spark, root, v, key_range=(lo, hi))
+            b = read(spark, root, v, ranges={"k": (lo, hi)})
+            assert sorted(a.inputFiles()) == sorted(b.inputFiles())
+            assert rows(a) == rows(b)
+            assert rows(a) == [r for r in full if lo <= r[0] <= hi]
+    # the plain layout is range-partitioned on k: pruning is selective
+    all_files = set(mt.read_version(spark, plain, 0).inputFiles())
+    assert set(
+        mt.read_version(spark, plain, 0, key_range=(10, 20)).inputFiles()
+    ) < all_files
+
+
 def test_occ_merge_rebase_on_disjoint_intervening(spark, tmp_path,
                                                   monkeypatch):
     """An intervening commit with a DISJOINT write-set triggers the
@@ -1720,7 +1796,7 @@ def test_occ_merge_rebase_on_disjoint_intervening(spark, tmp_path,
             fired["n"] += 1
             # rival lands AFTER our merge computed, BEFORE our claim:
             # keys {1, 9} = bucket 1, disjoint from ours (bucket 0)
-            mt.merge_into_bucketed(
+            mt.merge_into_bucketed_exclusive(
                 spark, root_, _occ_chg(spark, [1, 9], 7.0), **_OCC_CLAUSES
             )
         return orig(root_, base, bmeta, touched, spec, tmp, timeout)
@@ -1757,7 +1833,7 @@ def test_occ_merge_recompute_on_overlap(spark, tmp_path, monkeypatch):
         if fired["n"] == 0:
             fired["n"] += 1
             # rival touches bucket 0 TOO (key 8), same keys as ours
-            mt.merge_into_bucketed(
+            mt.merge_into_bucketed_exclusive(
                 spark, root_, _occ_chg(spark, [8], 7.0), **_OCC_CLAUSES
             )
         return orig(root_, base, bmeta, touched, spec, tmp, timeout)
@@ -1795,10 +1871,17 @@ def test_occ_merge_conflict_exhaustion_and_writesetless_rival(
     _mk_occ_base(spark, root)
     orig = mt._claim_merge_version
 
+    in_rival = {"on": False}
+
     def always_rival(root_, base, bmeta, touched, spec, tmp, timeout):
-        mt.merge_into_bucketed(
-            spark, root_, _occ_chg(spark, [0], 1.0), **_OCC_CLAUSES
-        )
+        if not in_rival["on"]:  # the rival's own claim goes straight on
+            in_rival["on"] = True
+            try:
+                mt.merge_into_bucketed_exclusive(
+                    spark, root_, _occ_chg(spark, [0], 1.0), **_OCC_CLAUSES
+                )
+            finally:
+                in_rival["on"] = False
         return orig(root_, base, bmeta, touched, spec, tmp, timeout)
 
     monkeypatch.setattr(mt, "_claim_merge_version", always_rival)
@@ -2369,7 +2452,7 @@ def test_bucketed_multicol_zorder_prune_and_carry(spark, tmp_path):
     src = spark.createDataFrame(
         [(1, 1.0), (5, 1.0), (9, 1.0)], "k long, amt double"
     )
-    mt.merge_into_bucketed(
+    mt.merge_into_bucketed_exclusive(
         spark, root, src,
         matched_update={"val": "t.val + s.amt"},
         not_matched_insert={"val": "s.amt"},
@@ -2560,7 +2643,7 @@ def test_restore_bucketed_is_metadata_only_and_auditable(spark, tmp_path):
 
     root = str(tmp_path / "tbl")
     _mk_occ_base(spark, root)
-    mt.merge_into_bucketed(
+    mt.merge_into_bucketed_exclusive(
         spark, root, _occ_chg(spark, [0, 8], 5.0), **_OCC_CLAUSES
     )
     n = mt.restore_table(spark, root, 0)
@@ -2579,7 +2662,7 @@ def test_restore_bucketed_is_metadata_only_and_auditable(spark, tmp_path):
     got1 = {r.k: r.val for r in mt.read_bucketed(spark, root, 1).collect()}
     assert got1[0] == 5.0 and got1[8] == 5.0
     # history continues on the restored state
-    mt.merge_into_bucketed(
+    mt.merge_into_bucketed_exclusive(
         spark, root, _occ_chg(spark, [1], 7.0), **_OCC_CLAUSES
     )
     got3 = {r.k: r.val for r in mt.read_bucketed(spark, root, 3).collect()}
@@ -2638,7 +2721,7 @@ def test_clone_shallow_forks_without_touching_source(spark, tmp_path):
     src = str(tmp_path / "src")
     dst = str(tmp_path / "dst")
     _mk_occ_base(spark, src)
-    mt.merge_into_bucketed(
+    mt.merge_into_bucketed_exclusive(
         spark, src, _occ_chg(spark, [0], 5.0), **_OCC_CLAUSES
     )
     assert mt.clone_shallow(src, dst) == 0
@@ -2660,7 +2743,7 @@ def test_clone_shallow_forks_without_touching_source(spark, tmp_path):
     )
     # diverge the clone; source must not move
     src_latest = mt.latest_version(src)
-    mt.merge_into_bucketed(
+    mt.merge_into_bucketed_exclusive(
         spark, dst, _occ_chg(spark, [1], 7.0), **_OCC_CLAUSES
     )
     assert mt.latest_version(src) == src_latest
@@ -2700,7 +2783,7 @@ def test_fence_race_lost_reads_rival_like_normal(spark, tmp_path,
     _mk_occ_base(spark, root)
     # a rival's claimed-but-unpublished snapshot at v1, bucket 1 only
     rv = spark.createDataFrame([(1, 7.0)], "k long, amt double")
-    mt.merge_into_bucketed(spark, root, rv, **_OCC_CLAUSES)
+    mt.merge_into_bucketed_exclusive(spark, root, rv, **_OCC_CLAUSES)
     marker1 = os.path.join(root, "_commits", "1")
     stash = marker1 + ".stash"
     os.rename(marker1, stash)  # marker "not yet published"
@@ -2738,7 +2821,7 @@ def test_change_feed_across_restore_emits_the_revert(spark, tmp_path):
 
     root = str(tmp_path / "tbl")
     _mk_occ_base(spark, root, n_keys=8)
-    mt.merge_into_bucketed(
+    mt.merge_into_bucketed_exclusive(
         spark, root, _occ_chg(spark, [0, 21], 5.0), **_OCC_CLAUSES
     )
     mt.restore_table(spark, root, 0)
@@ -2778,7 +2861,7 @@ def test_vacuum_keeps_registered_clone_references(spark, tmp_path):
             [(k, 0.0) for k in range(16)], "k long, val double"
         )
         mt.commit_bucketed(df, src, 0, on="k", n_buckets=4, hashed=False)
-        mt.merge_into_bucketed(  # v1 rewrites bucket 0 only
+        mt.merge_into_bucketed_exclusive(  # v1 rewrites bucket 0 only
             spark, src,
             spark.createDataFrame([(0, 5.0)], "k long, amt double"),
             matched_update={"val": "t.val + s.amt"},
@@ -2824,9 +2907,8 @@ def test_single_writer_paths_respect_fences(spark, tmp_path):
     numbered paths too (round-13 review): commit_snapshot /
     commit_bucketed raise on a fenced slot instead of silently reading
     the fence as 'already committed' (the caller's data would never
-    land), _write_marker refuses to replace a fence outright, and
-    merge_into_bucketed skips fenced slots above latest exactly like
-    the OCC claim loop."""
+    land), _write_marker refuses to replace a fence outright, and a
+    bucketed MERGE after them skips fenced slots above latest."""
     import dataframe_expressions_spark.sources.mergetable as mt
 
     # plain table: fence at slot 1 (a fencer that crashed before its
@@ -2844,14 +2926,14 @@ def test_single_writer_paths_respect_fences(spark, tmp_path):
     commit_snapshot(df, root, 2)  # next free slot works
     assert mt.committed_versions(root) == [0, 2]
 
-    # bucketed table: merge_into_bucketed skips the fenced slot
+    # bucketed table: merge_into_bucketed_exclusive skips the fenced slot
     rootb = str(tmp_path / "bucketed")
     _mk_occ_base(spark, rootb)
     assert mt._publish_fence(rootb, 1)
     # a dead claimant's orphan data under the fenced slot must never
     # be adopted
     os.makedirs(os.path.join(rootb, "v1"), exist_ok=True)
-    n = mt.merge_into_bucketed(
+    n = mt.merge_into_bucketed_exclusive(
         spark, rootb, _occ_chg(spark, [0], 5.0), **_OCC_CLAUSES
     )
     assert n == 2
@@ -3281,7 +3363,7 @@ def test_occ_merge_strict_check_runs_once_across_retries(
         if fired["n"] == 0:
             fired["n"] += 1
             # OVERLAPPING rival (same bucket 0): forces abort-and-rerun
-            mt.merge_into_bucketed(
+            mt.merge_into_bucketed_exclusive(
                 spark, root_, _occ_chg(spark, [16], 3.0), **_OCC_CLAUSES
             )
         return orig(root_, base, bmeta, touched, spec, tmp, timeout)

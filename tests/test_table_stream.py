@@ -55,7 +55,7 @@ def test_stream_source_feed_and_restart_recovery(spark, tmp_path):
     chg = spark.createDataFrame(
         [(0, 5.0), (21, 7.0)], "k long, amt double"
     )
-    mt.merge_into_bucketed(spark, root, chg, **CLAUSES)
+    mt.merge_into_bucketed_exclusive(spark, root, chg, **CLAUSES)
     ckpt, landing = str(tmp_path / "ckpt"), str(tmp_path / "landing")
     rows = _drain(spark, root, ckpt, landing)
     assert rows == [
@@ -63,7 +63,7 @@ def test_stream_source_feed_and_restart_recovery(spark, tmp_path):
         (0, 5.0, "update_postimage", 1),
         (21, 7.0, "insert", 1),
     ]
-    mt.merge_into_bucketed(
+    mt.merge_into_bucketed_exclusive(
         spark,
         root,
         spark.createDataFrame([(1, 100.0)], "k long, amt double"),
@@ -89,7 +89,7 @@ def test_stream_source_partition_planning_is_bucket_scoped(
     chg = spark.createDataFrame(
         [(0, 1.0), (8, 1.0), (3, 1.0)], "k long, amt double"
     )
-    mt.merge_into_bucketed(spark, root, chg, **CLAUSES)
+    mt.merge_into_bucketed_exclusive(spark, root, chg, **CLAUSES)
     parts = _step_partitions(root, 0)
     assert len(parts) == 2  # buckets {0, 3} only, not all 8
     got_buckets = set()
@@ -106,13 +106,13 @@ def test_stream_source_delete_rows_and_start_version(spark, tmp_path):
     start_version= skips already-consumed history."""
     root = str(tmp_path / "tbl")
     _mk_table(spark, root)
-    mt.merge_into_bucketed(
+    mt.merge_into_bucketed_exclusive(
         spark,
         root,
         spark.createDataFrame([(2, 1.0)], "k long, amt double"),
         **CLAUSES,
     )
-    mt.merge_into_bucketed(
+    mt.merge_into_bucketed_exclusive(
         spark,
         root,
         spark.createDataFrame([(4, 0.0)], "k long, amt double"),

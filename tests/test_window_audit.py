@@ -246,9 +246,10 @@ def test_remaining_wgl_sites_plan_as_take_ordered(spark, qid):
 
 
 def test_auto_two_phase_gate(spark, monkeypatch):
-    """The cost gate itself: driver-side (no job), env-overridable both
+    """The cost gate itself: driver-side (no job), env-forceable both
     ways, and flips exactly when estimated rows-per-group cross the
     task budget."""
+    from dataframe_expressions_spark.functions import ranks
     from dataframe_expressions_spark.functions.ranks import (
         auto_two_phase,
         estimated_rows,
@@ -270,7 +271,7 @@ def test_auto_two_phase_gate(spark, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_TWO_PHASE_RANK", "0")
     assert auto_two_phase(orders, n_groups=5, task_rows=1) is False
     monkeypatch.delenv("SPARK_GRAFT_TWO_PHASE_RANK")
-    monkeypatch.setenv("SPARK_GRAFT_TWO_PHASE_TASK_ROWS", "1")
+    monkeypatch.setattr(ranks, "TWO_PHASE_TASK_ROWS", 1)
     assert auto_two_phase(orders, n_groups=5) is True
 
 
@@ -283,18 +284,18 @@ def test_two_phase_self_arms_with_identical_rows(spark, monkeypatch, qid):
     the range-partitioned shape — percentile_approx cuts visible in the
     optimized plan — and return EXACTLY the native rows (flipping the
     gate can never change an answer)."""
+    from dataframe_expressions_spark.functions import ranks
     from dataframe_expressions_spark.operators.registry import load_all
 
     q = load_all()[qid]
     monkeypatch.delenv("SPARK_GRAFT_TWO_PHASE_RANK", raising=False)
-    monkeypatch.delenv("SPARK_GRAFT_TWO_PHASE_TASK_ROWS", raising=False)
     native = q.fn(spark, SF_SMOKE)
     native_plan = native._jdf.queryExecution().optimizedPlan().toString()
     assert "percentile_approx" not in native_plan  # gate stays down locally
     cols = native.columns
     want = sorted(tuple(r[c] for c in cols) for r in native.collect())
 
-    monkeypatch.setenv("SPARK_GRAFT_TWO_PHASE_TASK_ROWS", "1")
+    monkeypatch.setattr(ranks, "TWO_PHASE_TASK_ROWS", 1)
     armed = q.fn(spark, SF_SMOKE)
     armed_plan = armed._jdf.queryExecution().optimizedPlan().toString()
     assert "percentile_approx" in armed_plan, armed_plan
@@ -362,7 +363,6 @@ def test_estimated_groups_derivation_and_hint_free_arming(
     from dataframe_expressions_spark.sources.tables import load_table
 
     monkeypatch.delenv("SPARK_GRAFT_TWO_PHASE_RANK", raising=False)
-    monkeypatch.delenv("SPARK_GRAFT_TWO_PHASE_TASK_ROWS", raising=False)
 
     p = str(tmp_path / "t.parquet")
     spark.range(0, 20000).selectExpr(

@@ -1,23 +1,24 @@
-"""Round-15 optimization profiler: per-query build-vs-execute split and
-.explain("formatted") capture.
+"""Per-query profiler: build-vs-execute split and
+``.explain("formatted")`` capture for registered query ids.
 
 The bench's timed region is ``fn(spark, sf_dir)`` + a noop write, so a
 query's cost decomposes into (a) Python construction + Catalyst
 analysis/planning on the driver and (b) the executed jobs — including
 any eager actions (localCheckpoint / count / collect) the builder fires
-*inside* fn.  This tool separates them so round-15 targets the right
-lever per id (guide §1: measure first; §7.3: planning time is
-driver-side single-threaded work).
+*inside* fn.  This tool separates them so an optimization targets the
+right lever per id.
 
 Usage:
-  python tools/profile_r16.py before qid [qid ...]   # capture plans + timings
-  python tools/profile_r16.py after  qid [qid ...]
-  python tools/profile_r16.py before --top N         # N most anchor-expensive
+  python tools/profile_ids.py TAG qid [qid ...]   # e.g. TAG = before / after
+  python tools/profile_ids.py TAG --top N         # N most anchor-expensive
 
-Writes plans/r16/<qid>_<tag>.txt and prints one JSON line per qid:
+``--top`` ranks ids by the newest ``bench_anchor_r*.json`` in the repo
+root.  Writes plans/profile/<qid>_<TAG>.txt and prints one JSON line
+per qid:
 {"qid":..., "build_s":..., "exec_s":..., "total_s":..., "n":samples}
 build_s times fn() (captures eager in-fn actions + analysis);
-exec_s times the noop write of the returned frame.
+exec_s times the noop write of the returned frame.  The plan is
+captured outside both timed windows.
 """
 
 from __future__ import annotations
@@ -33,21 +34,28 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 
+def _usage(msg: str) -> None:
+    print(f"{msg}\n\n{__doc__}", file=sys.stderr)
+    sys.exit(2)
+
+
 def main() -> None:
+    if len(sys.argv) < 3:
+        _usage("need a TAG and at least one qid (or --top N)")
     tag = sys.argv[1]
     args = sys.argv[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     reps = int(os.environ.get("SPARK_GRAFT_PROFILE_REPS", "2"))
 
-    from dataframe_expressions_spark.operators.registry import load_all
-    from dataframe_expressions_spark.session import get_spark
-
-    queries = load_all()
     if args[0] == "--top":
         import glob
         import re
 
         cands = glob.glob(os.path.join(REPO, "bench_anchor_r*.json"))
+        if len(args) != 2 or not args[1].isdigit():
+            _usage("--top takes one integer N")
+        if not cands:
+            _usage(f"--top needs a bench_anchor_r*.json in {REPO}")
         newest = max(
             cands,
             key=lambda p: int(re.search(r"_r(\d+)", p).group(1)),
@@ -58,7 +66,11 @@ def main() -> None:
     else:
         qids = args
 
-    spark = get_spark("profile_r16")
+    from dataframe_expressions_spark.operators.registry import load_all
+    from dataframe_expressions_spark.session import get_spark
+
+    queries = load_all()
+    spark = get_spark("profile_ids")
     from pyspark.sql import functions as F
 
     # same warm-ups as bench.py's cheap core (JVM, shuffle, HOF, Arrow)
@@ -75,7 +87,7 @@ def main() -> None:
     ).write.format("noop").mode("overwrite").save()
     spark.range(1024).localCheckpoint(eager=True).count()
 
-    plans_dir = os.path.join(REPO, "plans", "r16")
+    plans_dir = os.path.join(REPO, "plans", "profile")
     os.makedirs(plans_dir, exist_ok=True)
 
     import gc
@@ -94,18 +106,18 @@ def main() -> None:
         samples = []
         plan_txt = None
         for _ in range(reps):
-            spark.sparkContext.setJobDescription(f"r16-profile:{qid}")
+            spark.sparkContext.setJobDescription(f"profile:{qid}")
             t0 = time.perf_counter()
             df = q.fn(spark, sf_dir)
             t1 = time.perf_counter()
-            if plan_txt is None:
+            df.write.format("noop").mode("overwrite").save()
+            t2 = time.perf_counter()
+            samples.append((t1 - t0, t2 - t1))
+            if plan_txt is None:  # untimed: planning text is not query cost
                 buf = io.StringIO()
                 with contextlib.redirect_stdout(buf):
                     df.explain("formatted")
                 plan_txt = buf.getvalue()
-            df.write.format("noop").mode("overwrite").save()
-            t2 = time.perf_counter()
-            samples.append((t1 - t0, t2 - t1))
             spark.sparkContext.setJobDescription(None)
         best = min(samples, key=lambda s: s[0] + s[1])
         rec = {
